@@ -1,4 +1,5 @@
 package graft
+import graft.tools.TaskMetricsListener
 import org.apache.spark.sql.SparkSession
 object Bench {
   /** The quadratic-BY-DESIGN parity baselines: each reproduces the
@@ -38,62 +39,57 @@ object Bench {
   private val Failed = Obs(-1.0, 0.0, 0L, 0L)
   private val Unmeasured = Obs(Double.MaxValue, 0.0, 0L, 0L)
 
+  // Operators persist intermediates (shingle sets, signatures, …)
+  // and those blocks outlive the query: by late bench the block
+  // manager was full of dead cache (round-2's 138 s minhash outlier
+  // was this — 13 s in a fresh JVM). Release each query's OWN
+  // persists after measuring it; setup-level caches (`keep`) survive.
+  // Release goes through Pins.scoped (Dataset-level): the raw
+  // RDD.unpersist sweep used through round 6 left dead CacheManager
+  // entries that silently no-op'd any LATER persist of the same
+  // canonical plan — q_dedup_ngram_jaccard's warm runs measured
+  // SLOWER than cold because q_dedup_cc's sweep had killed their
+  // shared capped-shingle pin for the rest of the JVM. The RDD diff
+  // below stays as a fallback for persists that bypass Pins.
+  private[graft] def swept[T](spark: SparkSession,
+                              keep: collection.Set[Int])(f: => T): T = {
+    val persistedBefore =
+      spark.sparkContext.getPersistentRDDs.keySet ++ keep
+    val out = graft.core.Pins.scoped(f)
+    spark.sparkContext.getPersistentRDDs
+      .filterNot { case (id, _) => persistedBefore(id) }
+      .values.foreach(_.unpersist(blocking = true))
+    out
+  }
+
+  /** The board's session, shared with graft.tools.Probe. Shuffle width
+    * defaults to the core count, which is the right size at sf0.1;
+    * SPARK_GRAFT_SHUFFLE sets width ∝ data for scale boards. The task-metrics listener is always on (one atomic-add per
+    * task end): every reported warm number carries its
+    * execCpu/spill/tasks decomposition, so a between-rounds mover can be
+    * classified from the bench artifact alone.
+    */
+  private[graft] def session(): (SparkSession, TaskMetricsListener) = {
+    val cpus = GraftSession.cpus
+    val spark = GraftSession.local(cpus,
+      GraftSession.positiveEnv("SPARK_GRAFT_SHUFFLE", cpus))
+    val listener = new TaskMetricsListener
+    spark.sparkContext.addSparkListener(listener)
+    (spark, listener)
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val skipParity = args.contains("--parity-baselines=skip") ||
       sys.env.get("SPARK_GRAFT_SKIP_PARITY").exists(v =>
         v == "1" || v.equalsIgnoreCase("true"))
     if (skipParity)
       System.err.println("[bench] skipping parity baselines: " +
         ParityBaselines.toSeq.sorted.mkString(", "))
-    // width ∝ data for scale boards (see TimeQ): default stays the
-    // core count, which is the right size at the driver's sf0.1
-    val shuffle = sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", cpus)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", shuffle)
-      // r19: advisory-size AQE coalescing (both knobs env-overridable).
-      // parallelismFirst=false is Spark's own production recommendation
-      // ("respect the configured target size"): reducer count derives
-      // from shuffle BYTES (advisory 64 MB default), so a KB-sized
-      // aggregate no longer fans out to `cpus` reducers paying ~60 ms
-      // fixed cpu each (measured: q_corpus_training_set 22→0.4
-      // execCpuS), while a 100-TB shuffle still fills every core —
-      // width ∝ data at every scale, the guide-§2.2 prescription. The
-      // cached-plan knob extends the same sizing to operator pins
-      // (InMemoryRelation otherwise freezes session-width partitions:
-      // q_dedup_ngram_jaccard 2.3→0.0 execCpuS, 66→4 tasks); explicit
-      // repartition(N)/repartitionByRange(N) calls (StableOrder, the
-      // loop pins) are REPARTITION_BY_NUM origins AQE never coalesces,
-      // so every spec-pinned partitioning contract is untouched
-      // (OPTIMIZATION_r19.md has the A/B boards).
-      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst",
-        sys.env.getOrElse("SPARK_GRAFT_AQE_PARALLELISM_FIRST", "false"))
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning",
-        sys.env.getOrElse("SPARK_GRAFT_AQE_CACHED_REPARTITION", "true"))
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // Task-metrics listener, always on (one atomic-add per task end):
-    // every reported warm number carries its execCpu/spill/tasks
-    // decomposition so a between-rounds mover can be classified from
-    // the bench artifact alone instead of re-litigating host drift.
-    val listener = new graft.tools.TaskMetricsListener
-    spark.sparkContext.addSparkListener(listener)
+    val (spark, listener) = session()
     def measure(f: => Unit): Obs = {
-      // drain before both snaps: listener dispatch is async even in
-      // local mode — tail onTaskEnd events must not cross run windows
-      org.apache.spark.sql.graft.bridge.drainListenerBus(spark)
-      val (_, c0, _, _, s0, n0) = listener.snap()
-      val t0 = System.nanoTime()
-      f
-      val wall = (System.nanoTime() - t0) / 1e9
-      org.apache.spark.sql.graft.bridge.drainListenerBus(spark)
-      val (_, c1, _, _, s1, n1) = listener.snap()
-      Obs(wall, (c1 - c0) / 1e9, (s1 - s0) / 1000000L, n1 - n0)
+      val (_, wall, d) = listener.window(spark)(f)
+      Obs(wall, d.cpuS, d.spillMB, d.tasks)
     }
     def minByWall(a: Obs, b: Obs): Obs = if (a.wall <= b.wall) a else b
     // shared-input setup (stable-order churn dataset build + encoder
@@ -124,27 +120,6 @@ object Bench {
     // `queries_cold` so differently-measured rounds stay comparable.
     // A failed query reports -1 and is excluded from the total so the
     // headline can't improve when queries crash.
-    // Operators persist intermediates (shingle sets, signatures, …)
-    // and those blocks outlive the query: by late bench the block
-    // manager was full of dead cache (round-2's 138 s minhash outlier
-    // was this — 13 s in a fresh JVM). Release each query's OWN
-    // persists after measuring it; setup-level caches survive.
-    // Release goes through Pins.scoped (Dataset-level): the raw
-    // RDD.unpersist sweep used through round 6 left dead CacheManager
-    // entries that silently no-op'd any LATER persist of the same
-    // canonical plan — q_dedup_ngram_jaccard's warm runs measured
-    // SLOWER than cold because q_dedup_cc's sweep had killed their
-    // shared capped-shingle pin for the rest of the JVM. The RDD diff
-    // below stays as a fallback for persists that bypass Pins.
-    def swept[T](f: => T): T = {
-      val persistedBefore =
-        spark.sparkContext.getPersistentRDDs.keySet ++ setupIds
-      val out = graft.core.Pins.scoped(f)
-      spark.sparkContext.getPersistentRDDs
-        .filterNot { case (id, _) => persistedBefore(id) }
-        .values.foreach(_.unpersist(blocking = true))
-      out
-    }
     def once(name: String): Obs = measure {
       // execute the EXACT planned query: df.count() would let Catalyst
       // column-prune the measured work (a projection-shaped query like
@@ -160,7 +135,7 @@ object Bench {
         !ParityBaselines(_)).toMap
       else SparkEntry.queries
     val measured = benchQueries.map { case (name, _) =>
-      val (cold, warm) = swept {
+      val (cold, warm) = swept(spark, setupIds) {
         try {
           val c = once(name)
           (c, minByWall(once(name), once(name)))
@@ -186,16 +161,17 @@ object Bench {
     // are hot), so those queries get ONE re-measure at the END of the
     // run — far from whatever disturbed their window — and report the
     // min of all observations.
+    def remeasure(name: String, pass: String): Obs = swept(spark, setupIds) {
+      try once(name)
+      catch { case e: Throwable =>
+        System.err.println(s"[bench] $name $pass FAILED: $e")
+        Unmeasured
+      }
+    }
     val guarded = measured.map { case (name, (cold, warm)) =>
       if (cold.wall >= 0 &&
           warm.wall > math.max(2.0 * cold.wall, cold.wall + 1.0)) {
-        val re = swept {
-          try once(name)
-          catch { case e: Throwable =>
-            System.err.println(s"[bench] $name re-measure FAILED: $e")
-            Unmeasured
-          }
-        }
+        val re = remeasure(name, "re-measure")
         System.err.println(f"[bench] $name warm outlier " +
           f"(cold=${cold.wall}%.2f warm=${warm.wall}%.2f) " +
           f"re-measured=${re.wall}%.2f")
@@ -213,13 +189,7 @@ object Bench {
     // Bounded cost: only the handful of genuinely-slow queries pay it.
     val results = guarded.map { case (name, (cold, warm)) =>
       if (cold.wall >= 0 && warm.wall >= 1.0) {
-        val re = swept {
-          try once(name)
-          catch { case e: Throwable =>
-            System.err.println(s"[bench] $name settle FAILED: $e")
-            Unmeasured
-          }
-        }
+        val re = remeasure(name, "settle")
         if (re.wall < warm.wall)
           System.err.println(
             f"[bench] $name settle ${warm.wall}%.2f -> ${re.wall}%.2f")

@@ -46,6 +46,19 @@ object SparkEntry {
   def queries: Map[String, (SparkSession, String) => DataFrame] =
     providers.map(_._1).reduce(_ ++ _)
 
+  /** Exits with status 2, listing the known names, when any of `names`
+    * is not a query: a typo must not run green on nothing.
+    */
+  def requireQueries(tool: String, names: Iterable[String]): Unit = {
+    val known = queries.keySet
+    val unknown = names.filterNot(known).toSeq.distinct.sorted
+    if (unknown.nonEmpty) {
+      System.err.println(s"[$tool] unknown query name(s): " +
+        s"${unknown.mkString(", ")}; known: ${known.toSeq.sorted.mkString(", ")}")
+      sys.exit(2)
+    }
+  }
+
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
     * the same parquet tables. Omitted keys → rows-only check.
     */

@@ -31,12 +31,9 @@ object Width {
     * statistic AQE uses) are exactly the wrong signal.
     */
   def explode(spark: SparkSession): Int =
-    sys.env.get("SPARK_GRAFT_EXPLODE_WIDTH").map(_.toInt).getOrElse {
-      val sessionParts =
-        spark.conf.get("spark.sql.shuffle.partitions").toLong
-      math.max(1L, math.min(sessionParts,
-        2L * spark.sparkContext.defaultParallelism)).toInt
-    }
+    envOr(math.max(1L, math.min(
+      spark.conf.get("spark.sql.shuffle.partitions").toLong,
+      2L * spark.sparkContext.defaultParallelism)).toInt)
 
   /** [[explode]] with a data term: width grows with the COUNTED rows
     * of the (already pinned / checkpointed — so the count is one cheap
@@ -48,12 +45,15 @@ object Width {
     * fills, so the cap — not the local calibration — binds. Same
     * shape and caps as PageRank.loopWidth (rows in, width out), kept
     * separate because the loop helper's 2×cores cap is spec-pinned
-    * with its own target semantics.
+    * with its own target semantics. `rows` is by name: a set
+    * `SPARK_GRAFT_EXPLODE_WIDTH` skips the sizing count.
     */
-  def explodeRows(spark: SparkSession, rows: Long,
+  def explodeRows(spark: SparkSession, rows: => Long,
                   rowsPerTask: Long): Int =
-    sys.env.get("SPARK_GRAFT_EXPLODE_WIDTH").map(_.toInt).getOrElse {
-      math.max(1L, math.min(explode(spark).toLong,
-        rows / rowsPerTask + 1L)).toInt
-    }
+    envOr(math.max(1L, math.min(explode(spark).toLong,
+      rows / rowsPerTask + 1L)).toInt)
+
+  /** `SPARK_GRAFT_EXPLODE_WIDTH` when set, else `width`. */
+  private def envOr(width: => Int): Int =
+    graft.GraftSession.positiveEnv("SPARK_GRAFT_EXPLODE_WIDTH", width)
 }

@@ -38,33 +38,10 @@ object PageRank {
   /** `edges`: (src string, dst string), assumed pre-deduplicated.
     * Returns (node, od, m): out-degree and final rank mass (mean 1.0;
     * divide by n for the classic probability-vector form).
-    *
-    * `earlyRelease`: halve the graph-construction PEAK storage window.
-    * By default the edge-sized ingest checkpoint (recompute insurance
-    * while the pinned edge table builds) and the edge-sized sorted pin
-    * coexist until the node table materializes — ~2× edge bytes of
-    * block storage, which competes with shuffle space on the same
-    * disks at scale (single-node measured: the sf100 probe, ~600M
-    * edges, ENOSPC'd exactly this window at 75 GB free). With
-    * `earlyRelease = true` the pin is materialized eagerly (ONE extra
-    * pass over the edge table — the paid price) and the checkpoint is
-    * released immediately, so peak live state is ~1× edge bytes plus
-    * the transient crossover. Results are bit-identical (spec-pinned);
-    * the default path is unchanged.
-    *
-    * DURABILITY caveat: releasing the ingest checkpoint also drops the
-    * loop's RECOMPUTE INSURANCE — the sorted edge pin's lineage roots
-    * in the released checkpoint, so on a cluster a lost/evicted block
-    * of the MEMORY_AND_DISK pin (executor loss, decommission) is
-    * unrecoverable and converts a recompute into a job failure. That
-    * trade is right for the single-node storage-window probes this
-    * knob was built for; CLUSTER callers should prefer the default
-    * path (insurance intact until the node table materializes) or
-    * accept re-running the job on executor loss.
     */
   def ranks(edges: DataFrame, iters: Int, damping: Double = 0.85,
-            roundDp: Int = 6, earlyRelease: Boolean = false): DataFrame =
-    run(edges, iters, damping, roundDp, seeds = None, earlyRelease)
+            roundDp: Int = 6): DataFrame =
+    run(edges, iters, damping, roundDp, seeds = None)
 
   /** Personalized PageRank (random walk with restart): teleport AND
     * dangling mass land uniformly on the SEED nodes instead of the
@@ -75,9 +52,8 @@ object PageRank {
     * m' = d·Σ m/od + [v ∈ S]·((1−d)·n + d·dangling)/|S|.
     */
   def personalizedRanks(edges: DataFrame, seeds: DataFrame, iters: Int,
-                        damping: Double = 0.85, roundDp: Int = 6,
-                        earlyRelease: Boolean = false): DataFrame =
-    run(edges, iters, damping, roundDp, seeds = Some(seeds), earlyRelease)
+                        damping: Double = 0.85, roundDp: Int = 6): DataFrame =
+    run(edges, iters, damping, roundDp, seeds = Some(seeds))
 
   /** Loop shuffle width from the data AND the machine: ~256k edges
     * per partition — between connectedComponents' 1M-edges/partition
@@ -117,8 +93,7 @@ object PageRank {
       nEdges / edgesPerPartition + 1L)).toInt
 
   private def run(edges: DataFrame, iters: Int, damping: Double,
-                  roundDp: Int, seeds: Option[DataFrame],
-                  earlyRelease: Boolean): DataFrame = {
+                  roundDp: Int, seeds: Option[DataFrame]): DataFrame = {
     val spark = edges.sparkSession
     val e0 = edges.localCheckpoint(true)
     val nEdges = e0.count()
@@ -158,17 +133,6 @@ object PageRank {
       val e = graft.core.Pins.pin(eb.withColumnRenamed("src", "node")
         .repartition(loopParts, col("node"))
         .sortWithinPartitions("node"))
-      // earlyRelease: materialize the pin NOW (one extra edge pass)
-      // and drop the ingest checkpoint immediately — everything below
-      // reads the pin, so peak block storage stays ~1× edge bytes
-      // instead of carrying checkpoint + pin (2×) through the node
-      // table's materialization (see [[ranks]]). Default path: the
-      // pin materializes lazily inside nodes' checkpoint and the
-      // release happens right after (recompute insurance intact).
-      if (earlyRelease) {
-        e.count()
-        graft.core.Pins.releaseCheckpoint(e0)
-      }
       // Node universe AND out-degree from ONE pass (r19 optimization,
       // guide §2.4): each edge contributes (src, 1) and (dst, 0); a
       // single map-side-combined sum(c) per node IS the out-degree,
@@ -176,8 +140,8 @@ object PageRank {
       // derivation (deg aggregate over the pin + src∪dst distinct +
       // left join, i.e. two aggregations, two extra passes over the
       // edge set and a join) collapses into one explode + groupBy.
-      // Reading the PIN (not eb) on both paths keeps the invariant the
-      // default path's release below relies on — the pin is fully
+      // Reading the PIN (not eb) keeps the invariant the release below
+      // relies on — the pin is fully
       // materialized inside nodes' eager checkpoint, before e0 goes —
       // and retires the r18 path-dependence (the measured pin-scan
       // penalty was the OLD shape's two extra columnar decodes; this
@@ -217,9 +181,8 @@ object PageRank {
       // table cached MEMORY_AND_DISK through nodes' eager checkpoint,
       // nodes itself counted above), so the edge-sized checkpoint —
       // the loop's biggest block set — is released before the
-      // iterations start competing for the storage pool. (Already
-      // gone on the earlyRelease path.)
-      if (!earlyRelease) graft.core.Pins.releaseCheckpoint(e0)
+      // iterations start competing for the storage pool.
+      graft.core.Pins.releaseCheckpoint(e0)
       var ranks = nodes.withColumn("m", lit(1.0)).localCheckpoint(true)
       var it = 0
       while (it < iters) {

@@ -578,18 +578,6 @@ object Similarity {
     */
   val TwoLevelBroadcastBytes: Long = 100L << 20
 
-  /** Public face of the two-level assignment — (id, cell) — for
-    * callers that want the 100-TB quantizer without the semDedup
-    * leader rule (and for the route A/B scale probe, which overrides
-    * `broadcastBytes` to force each join strategy on the same data).
-    */
-  def assignCellsTwoLevel(corpus: DataFrame, idCol: String, vecCol: String,
-                          numCells: Int,
-                          broadcastBytes: Long =
-                            TwoLevelBroadcastBytes): DataFrame =
-    assignTwoLevel(corpus, idCol, vecCol, numCells, broadcastBytes)
-      .select(col(idCol), col("cell"))
-
   /** Two-level nearest-cell assignment: (id, vec, cell). See
     * [[semDedupTwoLevel]] for the dataflow and cost bound. Every
     * coarse residue 0..nCoarse−1 owns ≥1 fine cell (nCoarse ≤ cells),

@@ -87,12 +87,7 @@ object GraphQueries {
     // 3 PageRank iterations over customer→supplier→part; mass units
     // (mean 1.0), 6dp-deterministic trajectory (ops.PageRank note)
     "q_pagerank" -> ((s, dir) =>
-      // SPARK_GRAFT_PR_EARLY_RELEASE=1: the scale-probe hook for the
-      // halved peak-storage window (PageRank.ranks scaladoc); results
-      // are identical either way (spec-pinned)
-      graft.ops.PageRank.ranks(entityEdges(s, dir), iters = 3,
-          earlyRelease =
-            sys.env.get("SPARK_GRAFT_PR_EARLY_RELEASE").contains("1"))
+      graft.ops.PageRank.ranks(entityEdges(s, dir), iters = 3)
         .select(nodeStr(col("node")).as("node"), col("m").as("rank_mass"))
         .orderBy("node")),
 

@@ -102,37 +102,6 @@ class PageRankSpec extends AnyFunSuite {
     assert(leaked == 0, s"expected 0 live RDDs after scope exit, got $leaked")
   }
 
-  test("earlyRelease: bit-identical ranks, zero live state after scope") {
-    // the halved peak-storage path (one eager edge pass + immediate
-    // checkpoint release) must change NOTHING observable: same ranks,
-    // same out-degrees, and the scope still releases every block
-    val sc = spark.sparkContext
-    val before = sc.getPersistentRDDs.keySet
-    val (dflt, early) = graft.core.Pins.scoped {
-      def collectRanks(er: Boolean) =
-        PageRank.ranks(graph, iters = 3, earlyRelease = er).collect()
-          .map(r => (r.getString(0), r.getLong(1), r.getDouble(2)))
-          .sortBy(_._1)
-      (collectRanks(false), collectRanks(true))
-    }
-    assert(dflt.sameElements(early))
-    val leaked = (sc.getPersistentRDDs.keySet -- before).size
-    assert(leaked == 0, s"earlyRelease leaked $leaked RDDs past the scope")
-    // personalized flavor too (same run() body, seeded restart set)
-    import spark.implicits._
-    val seeds = Seq("a").toDF("node")
-    val p0 = graft.core.Pins.scoped {
-      PageRank.personalizedRanks(graph, seeds, iters = 2).collect()
-        .map(r => (r.getString(0), r.getDouble(2))).sortBy(_._1)
-    }
-    val p1 = graft.core.Pins.scoped {
-      PageRank.personalizedRanks(graph, seeds, iters = 2,
-          earlyRelease = true).collect()
-        .map(r => (r.getString(0), r.getDouble(2))).sortBy(_._1)
-    }
-    assert(p0.sameElements(p1))
-  }
-
   test("loopWidth is the ONE shared helper: CC's 1M-edges/partition " +
       "target derives and caps identically") {
     // connectedComponents now calls PageRank.loopWidth with its own

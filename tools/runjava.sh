@@ -1,7 +1,7 @@
 #!/bin/bash
 # Run a graft main class directly against the compiled classes + the
 # image's Spark jars — sbt-free, so long measurement runs don't hold
-# the sbt lock. Usage: MEM=64g tools/runjava.sh graft.tools.TimeQ <args...>
+# the sbt lock. Usage: MEM=64g tools/runjava.sh graft.tools.Probe <sfDir> <query...>
 set -e
 MEM="${MEM:-8g}"
 ADDOPENS=""
